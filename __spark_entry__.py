@@ -12,13 +12,18 @@ plan compilers so the gate exercises the engine itself.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
-from collections.abc import Callable
+import warnings
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
 from skywalking_banyandb_spark import registry
 from skywalking_banyandb_spark.catalog import default_catalog
@@ -46,9 +51,57 @@ def entry(spark: SparkSession) -> DataFrame:
     return compile_measure(spark, default_catalog(sf_dir), q)
 
 
+# Sweep policy. The driver records only the first SWEEP_CAP entries of
+# queries() each round, one CORRECTNESS_rNN.json per round next to this
+# file, so the order is the rotation: entries whose compile paths changed
+# this round (TOUCHED, edited by hand each round), then entries no round
+# has recorded, then the rest with the oldest newest-round first.
+SWEEP_CAP = 50
+TOUCHED = ("request_yaml_trace",)
+_ROUND_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")
+
+
+def _round_files(root: str) -> dict[int, str]:
+    found = (_ROUND_FILE.fullmatch(os.path.basename(p))
+             for p in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
+    return {int(m.group(1)): os.path.join(root, m.group(0))
+            for m in found if m}
+
+
+def newest_rounds(names: Iterable[str], root: str = _HERE) -> dict[str, int]:
+    """Newest round whose CORRECTNESS file records each entry (0 = never)."""
+    newest = dict.fromkeys(names, 0)
+    for rnd, path in _round_files(root).items():
+        with open(path) as fh:
+            for k in json.load(fh):
+                if k in newest:
+                    newest[k] = max(newest[k], rnd)
+    return newest
+
+
+def sweep_order(names: Iterable[str], root: str = _HERE) -> list[str]:
+    names = list(names)
+    if not _round_files(root):
+        return names
+    newest = newest_rounds(names, root)
+    front = [k for k in TOUCHED if k in newest]
+    front += [k for k in names if newest[k] == 0 and k not in front]
+    if len(front) > SWEEP_CAP:
+        warnings.warn(
+            f"sweep front ({len(front)} entries) exceeds the {SWEEP_CAP}-"
+            f"entry driver cap; {front[SWEEP_CAP:]} will not be verified "
+            "this round", stacklevel=2)
+    pos = {k: i for i, k in enumerate(names)}
+    rest = sorted(set(names) - set(front), key=lambda k: (newest[k], pos[k]))
+    return front + rest
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return registry.queries()
+    qs = registry.queries()
+    return {k: qs[k] for k in sweep_order(qs)}
 
 
 def oracle_sql() -> dict[str, str]:
-    return registry.oracle_sql()
+    oracles = registry.oracle_sql()
+    return {k: oracles[k] for k in sweep_order(registry.queries())
+            if k in oracles}

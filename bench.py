@@ -115,20 +115,52 @@ EXTENDED = [
 ]
 
 
-def _ab_freshness(ab, head: "str | None", changed_paths):
+def _sources_digest(root: str) -> str:
+    """sha256 over the sources a bench run executes: bench.py, the driver
+    contract and every module of the engine package (relative path and
+    bytes, in path order). Tests, scripts and perfbench/ are left out —
+    they do not change what this bench measures."""
+    import glob
+    import hashlib
+    paths = ["bench.py", "__spark_entry__.py"] + sorted(
+        os.path.relpath(p, root) for p in glob.glob(
+            os.path.join(root, "skywalking_banyandb_spark", "**", "*.py"),
+            recursive=True))
+    h = hashlib.sha256()
+    for rel in paths:
+        h.update(rel.replace(os.sep, "/").encode() + b"\0")
+        with open(os.path.join(root, rel), "rb") as f:
+            h.update(f.read() + b"\0")
+    return h.hexdigest()
+
+
+def _ab_freshness(ab, head: "str | None", changed_paths,
+                  digest: "str | None" = None):
     """A/B-pair freshness gate (VERDICT r14 Next #3): the embedded pair
     is only evidence about THIS bench's code if no engine source changed
-    between the pair's current-HEAD run and the bench HEAD. A pair whose
-    ``cur_head.commit`` matches the bench HEAD — or differs from it only
+    between the pair's current-HEAD run and the bench. A pair that
+    records the ``sources_digest`` of the tree it ran is fresh exactly
+    when that digest equals ``digest`` (this tree's), whatever git says.
+    An older pair without one falls back to commits: its
+    ``cur_head.commit`` must match the bench HEAD or differ from it only
     by artifact commits (no ``.py`` in the diff; BENCH/SCALE/AB json and
-    doc updates are measurement bookkeeping, not engine changes) — embeds
-    under ``ab_prev_head``; anything else embeds under
+    doc updates are measurement bookkeeping, not engine changes). A
+    fresh pair embeds under ``ab_prev_head``; anything else embeds under
     ``ab_prev_head_stale`` with an explicit warning, so a stale pair is
     loud instead of silently misleading. Returns (key, record)."""
     if not isinstance(ab, dict) or "cur_head" not in ab:
         return "ab_prev_head", ab          # absent / unreadable-error stub
     cur = ab.get("cur_head", {}).get("commit")
     rec = {**ab, "head_at_bench": head}
+    pair_digest = ab.get("cur_head", {}).get("sources_digest")
+    if pair_digest and digest:
+        if pair_digest == digest:
+            return "ab_prev_head", rec
+        rec["warning"] = (
+            f"pair's sources_digest {pair_digest[:12]} does not match this "
+            f"tree's {digest[:12]} — rerun scripts/ab_bench.py for a pair "
+            "that measures this code")
+        return "ab_prev_head_stale", rec
     if head is None:
         rec["warning"] = ("could not resolve the repo HEAD; pair "
                           "freshness not checked")
@@ -360,8 +392,9 @@ def main() -> None:
             # an interrupted ab_bench run must degrade the OPTIONAL
             # sidecar, never break the scored bench
             ab_prev_head = {"error": f"unreadable AB_PREV_HEAD.json: {exc}"}
+    digest = _sources_digest(os.path.dirname(os.path.abspath(__file__)))
     ab_key, ab_rec = _ab_freshness(ab_prev_head,
-                                   *_ab_git_state(ab_prev_head))
+                                   *_ab_git_state(ab_prev_head), digest)
     with open(detail_path, "w") as fh:
         json.dump({
             "metric": "headline_query_total",
@@ -381,6 +414,7 @@ def main() -> None:
             "ann_incremental_recall_sweep": ann_sweep,
             "ann_policy_retrain": ann_policy_seq,
             ab_key: ab_rec,
+            "sources_digest": digest,
             "sf": sf,
         }, fh, indent=1)
     print(json.dumps({

@@ -4,13 +4,15 @@
 Both canaries rose two rounds running (scan +40% cumulative, agg +68%)
 with raw walls adjudicated flat each time — cross-round canary ratios
 were the only evidence. This script grounds the drift ruling with a
-PAIRED run: check the previous round's HEAD out into a throwaway git
-worktree, run ITS `bench.py` there, then run the current tree's
+PAIRED run: export the previous round's HEAD into a throwaway directory
+(`git archive`), run ITS `bench.py` there, then run the current tree's
 `bench.py`, back-to-back in the same hour on the same host, and write
 both records (headline totals, extended totals, canaries, per-query
 walls) to AB_PREV_HEAD.json at the repo root. `bench.py` embeds that
 file as the `ab_prev_head` section of BENCH_DETAIL.json, so the
-driver-captured BENCH_DETAIL_r{N} carries the paired evidence.
+driver-captured BENCH_DETAIL_r{N} carries the paired evidence. The
+current side also records the `sources_digest` its bench run reports;
+bench.py's freshness gate compares it with the tree it runs in.
 
 Both runs share the deterministic on-disk artifacts
 (/tmp/banyandb_spark_ann_index — kind-versioned, identical across the
@@ -26,8 +28,10 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import subprocess
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -47,7 +51,7 @@ def _run_bench(tree: str) -> dict:
         raise RuntimeError(f"bench failed in {tree}:\n{proc.stderr[-3000:]}")
     with open(os.path.join(tree, "BENCH_DETAIL.json")) as f:
         detail = json.load(f)
-    return {
+    rec = {
         "headline_total_sec": detail["value"],
         "extended_total_sec": detail["extended_total"],
         "canary_sec": detail["canary"]["sec"],
@@ -57,6 +61,9 @@ def _run_bench(tree: str) -> dict:
         "wall_sec": round(time.time() - t0, 1),
         "started_at_epoch": int(t0),
     }
+    if "sources_digest" in detail:
+        rec["sources_digest"] = detail["sources_digest"]
+    return rec
 
 
 def main() -> None:
@@ -81,18 +88,17 @@ def main() -> None:
     if not prev:
         raise SystemExit("no previous-round commit found; pass --prev")
 
-    wt = f"/tmp/ab_prev_{prev[:8]}"
-    subprocess.run(["git", "worktree", "remove", "--force", wt],
-                   cwd=REPO, capture_output=True)
-    _git("worktree", "add", "--detach", wt, prev)
+    wt = tempfile.mkdtemp(prefix=f"ab_prev_{prev[:8]}_")
     try:
+        archive = subprocess.run(["git", "archive", prev], cwd=REPO,
+                                 check=True, capture_output=True).stdout
+        subprocess.run(["tar", "-x", "-C", wt], input=archive, check=True)
         print(f"[A] prev HEAD {prev[:8]} in {wt}", flush=True)
         prev_rec = _run_bench(wt)
         print(f"[B] current HEAD {cur[:8]} in {REPO}", flush=True)
         cur_rec = _run_bench(REPO)
     finally:
-        subprocess.run(["git", "worktree", "remove", "--force", wt],
-                       cwd=REPO, capture_output=True)
+        shutil.rmtree(wt, ignore_errors=True)
 
     record = {
         "prev_head": {"commit": prev, **prev_rec},

@@ -47,14 +47,18 @@ def union_groups(dfs: Sequence[DataFrame]) -> DataFrame:
         else:
             uniq.append(p)
             mult.append(1)
-    parts = [
-        (u.select(
-            "*",
-            F.explode(F.array_repeat(F.lit(1), m)).alias("_gmult"))
-         .drop("_gmult"))
-        if m > 1 else u
-        for u, m in zip(uniq, mult)
-    ]
+    parts = [_repeat_rows(u, m) if m > 1 else u for u, m in zip(uniq, mult)]
     if len(parts) == 1:
         return parts[0]
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+
+
+def _repeat_rows(df: DataFrame, m: int) -> DataFrame:
+    """Every row of ``df`` repeated ``m`` times; the multiplier column
+    takes a name no input column has, so dropping it loses nothing."""
+    taken = {c.lower() for c in df.columns}
+    alias = "_gmult"
+    while alias in taken:
+        alias = "_" + alias
+    return (df.select("*", F.explode(F.array_repeat(F.lit(1), m)).alias(alias))
+            .drop(alias))

@@ -137,9 +137,9 @@ def compile_trace(spark: SparkSession, catalog: Catalog, q: TraceQuery) -> DataF
         if q.trace_ids:
             df = df.where(F.col(s.trace_id_column).isin(*list(q.trace_ids)))
         parts.append(df)
-    df = union_groups(parts)
-
     tid_col = ref.trace_id_column
+    # a span without a trace id belongs to no trace
+    df = union_groups(parts).where(F.col(tid_col).isNotNull())
     key_agg, desc = _order_key(ref, q)
     limit = q.limit if q.limit is not None else DEFAULT_LIMIT
 

@@ -11,6 +11,10 @@ from skywalking_banyandb_spark.session import get_spark
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"
+# BanyanDB's conformance corpus, replayed verbatim when it is present
+REFERENCE_CASES = "/root/reference/test/cases"
+HAVE_REFERENCE = os.path.isdir(REFERENCE_CASES)
+REFERENCE_MISSING = f"reference corpus {REFERENCE_CASES} is not present"
 
 # The pytest conformance sweep compares queries() vs oracle_sql() at
 # SF_SMALL, while the driver does so at sf0.01 — lazy oracles that embed
@@ -21,7 +25,7 @@ os.environ.setdefault("SPARK_GRAFT_ORACLE_SF_DIR", SF_SMALL)
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("banyandb-spark-tests", cpus=8)
+    s = get_spark("banyandb-spark-tests")
     yield s
     s.stop()
 

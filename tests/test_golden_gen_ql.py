@@ -38,10 +38,14 @@ from skywalking_banyandb_spark.request_loader import (
     load_trace_request,
 )
 
-from test_golden_gen_verbatim import (
+from conftest import HAVE_REFERENCE, REFERENCE_CASES, REFERENCE_MISSING
+
+if not HAVE_REFERENCE:
+    pytest.skip(REFERENCE_MISSING, allow_module_level=True)
+
+from test_golden_gen_verbatim import (  # noqa: E402
     MEASURE_CASES,
     MEASURE_ERR,
-    REF,
     STREAM_CASES,
     STREAM_ERR,
     T0,
@@ -51,7 +55,7 @@ from test_golden_gen_verbatim import (
     _load_case,
     twin_catalog,
 )
-from conftest import SF_SMALL
+from conftest import SF_SMALL  # noqa: E402
 
 _NOW = dt.datetime(2024, 2, 1)
 _TIME_RE = re.compile(r"TIME\s*(?:>|>=)\s*'-[^']*'", re.IGNORECASE)
@@ -64,7 +68,7 @@ def cat():
 
 
 def _read_ql(kind: str, name: str) -> str:
-    with open(f"{REF}/{kind}/data/input/{name}.ql") as fh:
+    with open(f"{REFERENCE_CASES}/{kind}/data/input/{name}.ql") as fh:
         text = " ".join(
             ln.strip() for ln in fh
             if ln.strip() and not ln.lstrip().startswith("#")

@@ -61,10 +61,13 @@ from skywalking_banyandb_spark.request_loader import (
     load_trace_request,
 )
 
-from conftest import SF_SMALL
-from test_golden_corpus import T0, T1, _run_dual
+from conftest import HAVE_REFERENCE, REFERENCE_CASES, REFERENCE_MISSING, SF_SMALL
 
-REF = "/root/reference/test/cases"
+if not HAVE_REFERENCE:
+    pytest.skip(REFERENCE_MISSING, allow_module_level=True)
+
+from test_golden_corpus import T0, T1, _run_dual  # noqa: E402
+
 T0S, T1S = T0.replace("T", " "), T1.replace("T", " ")
 
 # ---------------------------------------------------------------------------
@@ -97,7 +100,7 @@ def env(spark):
 def _cases(kind: str, ext: str) -> list:
     return sorted(
         os.path.basename(p)[: -(len(ext) + 1)]
-        for p in glob.glob(f"{REF}/{kind}/data/input/gen_*.{ext}")
+        for p in glob.glob(f"{REFERENCE_CASES}/{kind}/data/input/gen_*.{ext}")
     )
 
 
@@ -111,7 +114,7 @@ TRACE_ERR = {"gen_err_match_sw"}
 
 
 def _load_case(kind: str, name: str, ext: str) -> dict:
-    with open(f"{REF}/{kind}/data/input/{name}.{ext}") as fh:
+    with open(f"{REFERENCE_CASES}/{kind}/data/input/{name}.{ext}") as fh:
         d = yaml.safe_load(fh.read())
     d["timeRange"] = {"begin": f"{T0}Z", "end": f"{T1}Z"}
     return d

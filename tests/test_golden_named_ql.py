@@ -41,9 +41,14 @@ from skywalking_banyandb_spark.request_loader import (
     load_trace_request,
 )
 
-from test_golden_gen_ql import _TIME_ABS, _assert_same
-from test_golden_gen_verbatim import REF, _load_case, twin_catalog
-from test_golden_named_verbatim import (
+from conftest import HAVE_REFERENCE, REFERENCE_CASES, REFERENCE_MISSING
+
+if not HAVE_REFERENCE:
+    pytest.skip(REFERENCE_MISSING, allow_module_level=True)
+
+from test_golden_gen_ql import _TIME_ABS, _assert_same  # noqa: E402
+from test_golden_gen_verbatim import _load_case, twin_catalog  # noqa: E402
+from test_golden_named_verbatim import (  # noqa: E402
     MEASURE_CASES,
     MEASURE_ERR,
     PROPERTY_CASES,
@@ -53,7 +58,7 @@ from test_golden_named_verbatim import (
     TRACE_CASES,
     TRACE_ERR,
 )
-from conftest import SF_SMALL
+from conftest import SF_SMALL  # noqa: E402
 
 _NOW = dt.datetime(2024, 2, 1)
 _TIME_RE = re.compile(r"TIME\s*(?:>|>=)\s*('-[^']*'|\?)", re.IGNORECASE)
@@ -72,7 +77,7 @@ def _read_named_ql(kind: str, name: str):
     """Returns (ql_text with absolute TIME, params list)."""
     params = []
     lines = []
-    with open(f"{REF}/{kind}/data/input/{name}.ql") as fh:
+    with open(f"{REFERENCE_CASES}/{kind}/data/input/{name}.ql") as fh:
         for ln in fh:
             if ln.startswith("#!params:"):
                 import json

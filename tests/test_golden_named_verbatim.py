@@ -53,10 +53,13 @@ from skywalking_banyandb_spark.request_loader import (
     load_trace_request,
 )
 
-from conftest import SF_SMALL
-from test_golden_corpus import _run_dual
-from test_golden_gen_verbatim import (
-    REF,
+from conftest import HAVE_REFERENCE, REFERENCE_CASES, REFERENCE_MISSING, SF_SMALL
+
+if not HAVE_REFERENCE:
+    pytest.skip(REFERENCE_MISSING, allow_module_level=True)
+
+from test_golden_corpus import _run_dual  # noqa: E402
+from test_golden_gen_verbatim import (  # noqa: E402
     T0S,
     T1S,
     _TIME,
@@ -76,7 +79,7 @@ import twin_catalog as tc
 
 def _named(kind: str, ext: str) -> list:
     out = []
-    for p in sorted(glob.glob(f"{REF}/{kind}/data/input/*.{ext}")):
+    for p in sorted(glob.glob(f"{REFERENCE_CASES}/{kind}/data/input/*.{ext}")):
         b = os.path.basename(p)[: -(len(ext) + 1)]
         if not b.startswith("gen_") and b != "write_mixed":
             out.append(b)

@@ -53,8 +53,12 @@ from skywalking_banyandb_spark.response import (
     trace_response,
 )
 
-from test_golden_gen_verbatim import (  # noqa: F401 (env fixture)
-    REF,
+from conftest import HAVE_REFERENCE, REFERENCE_CASES, REFERENCE_MISSING
+
+if not HAVE_REFERENCE:
+    pytest.skip(REFERENCE_MISSING, allow_module_level=True)
+
+from test_golden_gen_verbatim import (  # noqa: F401,E402 (env fixture)
     _load_case,
     env,
 )
@@ -65,7 +69,7 @@ _B, _E = "2024-01-01T00:00:00Z", "2024-02-01T00:00:00Z"
 
 
 def _want(kind: str, case: str, ext: str) -> dict:
-    with open(f"{REF}/{kind}/data/want/{case}.{ext}") as f:
+    with open(f"{REFERENCE_CASES}/{kind}/data/want/{case}.{ext}") as f:
         return yaml.safe_load(f)
 
 

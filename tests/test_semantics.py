@@ -344,3 +344,32 @@ def test_huge_offset_is_memory_safe_and_empty(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" not in plan, plan
     assert df.count() == 0
+
+
+def test_null_trace_id_spans_form_no_trace(spark, tmp_path):
+    """A span with a NULL trace id belongs to no trace: it must not come
+    back as a ``trace_id = NULL`` row with ``spans = NULL``."""
+    import datetime as dt
+
+    from skywalking_banyandb_spark.catalog import Catalog, TraceSchema
+    from skywalking_banyandb_spark.model import TimeRange, TraceQuery
+    from skywalking_banyandb_spark.plans.trace import compile_trace
+
+    t = dt.datetime(2024, 1, 5, 12)
+    path = str(tmp_path / "spans")
+    spark.createDataFrame(
+        [("t1", "s0", t), ("t1", "s1", t + dt.timedelta(seconds=1)),
+         (None, "s2", t + dt.timedelta(seconds=2))],
+        "trace_id string, span_id string, ts timestamp",
+    ).write.parquet(path)
+    cat = Catalog()
+    cat.register(TraceSchema(
+        group="g1", name="spans", paths=(f"{path}/*.parquet",),
+        ts_column="ts", trace_id_column="trace_id", span_id_column="span_id",
+        span_column=None, tags=()))
+    q = TraceQuery(groups=["g1"], name="spans",
+                   time_range=TimeRange.of("2024-01-05T00:00:00",
+                                           "2024-01-06T00:00:00"))
+    rows = compile_trace(spark, cat, q).collect()
+    assert [(r.trace_id, r.span_count) for r in rows] == [("t1", 2)]
+    assert [s.span_id for s in rows[0].spans] == ["s0", "s1"]

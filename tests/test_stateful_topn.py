@@ -123,6 +123,19 @@ def test_multigroup_schema_merge_null_fill(spark):
     assert rows[1].tag_a is None and rows[1].tag_b == 7.5
 
 
+def test_identical_parts_keep_a_gmult_column(spark):
+    """The identical-part collapse multiplies rows through a helper
+    column; an input column that happens to share its name must survive,
+    and every row must still appear once per part."""
+    from skywalking_banyandb_spark.operators.merge import union_groups
+
+    a = spark.createDataFrame([(1, 10), (2, 20)], "id long, _gmult long")
+    u = union_groups([a, a])
+    assert u.columns == ["id", "_gmult"]
+    assert sorted(tuple(r) for r in u.collect()) == [
+        (1, 10), (1, 10), (2, 20), (2, 20)]
+
+
 def test_stateful_topn_far_late_redelivery_dropped(spark):
     """A far-late re-delivery (window_end + lateness already behind the
     watermark) must be DROPPED, not crash the timeout registration and not

@@ -1,141 +1,101 @@
-"""Driver-window rotation discipline (VERDICT r11 #2 / r15 Next #2).
+"""Driver-window rotation invariants.
 
-The driver records only the FIRST 50 `queries()` entries per round, so
-the sweep order IS the rotation policy: stale-first cohort, then
-never-driver-seen entries, then this round's touched compile paths,
-then everything else oldest-first. Round 15 cleared its window without
-a spill, so round 16's seed is simply the r12 cohort — the 29 entries
-whose newest driver row is r12, the oldest anywhere after r15's
-histogram (r12:29 / r13:44 / r14:49 / r15:50) — followed by the eight
-paths r15 rewrote AFTER its rotation was seeded (the minhash persist/
-hashcode family, tpch_q21, quality_repetition — VERDICT r15 What's
-wrong #1), which therefore carry no driver row for their current code.
-These tests pin the r16 composition mechanically so a silent
-mis-ordering (an entry waiting two extra rounds unnoticed) cannot ship.
+The driver records only the first ``SWEEP_CAP`` entries of ``queries()``
+per round, so the sweep order in ``__spark_entry__`` is the rotation
+policy. It is derived from the committed ``CORRECTNESS_rNN.json`` files:
+``TOUCHED`` first, then entries no round has recorded, then the rest
+oldest newest-round first (registration order breaks ties).
 """
 
 from __future__ import annotations
 
+import json
+import os
 import warnings
 
+import __spark_entry__ as em
 from skywalking_banyandb_spark import registry as reg
 
 
-def _front():
-    stale = [k for k in reg._R16_STALE_FIRST if k in reg._QUERIES]
-    fresh = [k for k in reg._QUERIES
-             if reg._newest_driver_round(k) == 0 and k not in stale]
-    touched = [k for k in reg._R16_TOUCHED
-               if k in reg._QUERIES and k not in fresh and k not in stale]
-    return stale + fresh + touched
+def _write_round(root, rnd: int, names) -> None:
+    with open(os.path.join(root, f"CORRECTNESS_r{rnd:02d}.json"), "w") as fh:
+        json.dump({k: {"hash_match": True} for k in names}, fh)
 
 
-def test_r12_cohort_leads_the_window():
-    """The r16 seed is the full r12 cohort: every _R16_STALE_FIRST entry
-    must actually have its newest driver row at r12 (seeding anything
-    fresher would waste window slots; anything staler cannot exist
-    after r15's histogram), and the sweep leads with exactly that tuple."""
-    order = list(reg.queries())
-    stale = [k for k in reg._R16_STALE_FIRST if k in reg._QUERIES]
-    assert order[:len(stale)] == stale
-    for k in stale:
-        assert reg._newest_driver_round(k) == 12, (
-            f"{k} has newest driver row r{reg._newest_driver_round(k)}, "
-            "not r12 — the seed no longer matches the staleness histogram")
-
-
-def test_every_r12_row_is_in_the_seed():
-    """No r12-stale entry may be left out of the seed — it would wait
-    behind fresher rows and silently fall past the cap."""
-    missing = [k for k in reg._QUERIES
-               if reg._newest_driver_round(k) == 12
-               and k not in reg._R16_STALE_FIRST]
-    assert not missing, f"r12-stale entries outside the seed: {missing}"
-
-
-def test_r15_rewrites_are_in_the_touched_front():
-    """VERDICT r15 What's-wrong #1: the r15 rewrites missed the r15
-    window and MUST get driver rows in r16 — each must sit inside the
-    first 50 sweep positions."""
-    must = {"dedup_minhash_lsh", "dedup_minhash_lsh_3gram",
-            "dedup_minhash_lsh_agg", "dedup_minhash_lsh_k32",
-            "dedup_minhash_incremental", "dedup_minhash_compacted",
-            "tpch_q21_sole_delayed", "quality_repetition"}
-    assert must <= set(reg._R16_TOUCHED)
-    window = list(reg.queries())[:reg._SWEEP_CAP]
-    missing = must - set(window)
-    assert not missing, (
-        f"r15 rewrites outside the 50-entry driver window: {missing}")
+def _front(names, newest):
+    touched = [k for k in em.TOUCHED if k in newest]
+    return touched + [k for k in names if newest[k] == 0 and k not in touched]
 
 
 def test_window_composition():
+    names = list(reg.queries())
+    newest = em.newest_rounds(names)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        order = list(reg.queries())
-    front = _front()
+        order = list(em.queries())
+    assert sorted(order) == sorted(names)
+    front = _front(names, newest)
     assert order[:len(front)] == front
-    spill = front[reg._SWEEP_CAP:]
-    if spill:
-        # overflow rule: the warning must name the spilled entries and
-        # each must have a driver row fresh enough to wait one round
-        assert all(reg._newest_driver_round(k) >= 13 for k in spill)
-        msgs = [str(x.message) for x in w if "exceeds" in str(x.message)]
-        assert msgs and all(k in msgs[0] for k in spill)
-    else:
-        assert not [x for x in w if "exceeds" in str(x.message)]
-
-
-def test_r16_front_fits_or_spill_is_documented():
-    """29 stale + fresh + touched; if it overflows, the spilled tail
-    must be copied into the next round's seed — assert we can at least
-    name it deterministically here."""
-    stale = [k for k in reg._R16_STALE_FIRST if k in reg._QUERIES]
-    assert len(stale) == 29  # the full r12 cohort
+    assert all(newest[k] > 0 for k in order[len(front):])
+    spilled = [x for x in w if "exceeds" in str(x.message)]
+    assert bool(spilled) == (len(front) > em.SWEEP_CAP)
 
 
 def test_nothing_outside_the_window_is_stale():
-    """After the r16 sweep records the first 50, no entry's newest
-    driver row anywhere in the registry may be older than r13 (the r12
-    cohort all sits inside the window)."""
-    order = list(reg.queries())
-    for k in order[reg._SWEEP_CAP:]:
-        assert reg._newest_driver_round(k) >= 13, (
-            f"{k} (newest driver row r{reg._newest_driver_round(k)}) "
-            "is outside the 50-entry window — it would go stale silently")
-
-
-def test_r15_seen_set_matches_correctness_file():
-    """_R15_DRIVER_SEEN must equal the keys of CORRECTNESS_r15.json —
-    the bookkeeping the staleness ordering rests on."""
-    import json
-    import os
-    path = os.path.join(os.path.dirname(__file__), "..",
-                        "CORRECTNESS_r15.json")
-    recorded = frozenset(json.load(open(path)).keys())
-    assert reg._R15_DRIVER_SEEN == recorded
-
-
-def test_r14_seen_set_matches_correctness_file():
-    """_R14_DRIVER_SEEN must equal the keys of CORRECTNESS_r14.json —
-    the bookkeeping the staleness ordering rests on."""
-    import json
-    import os
-    path = os.path.join(os.path.dirname(__file__), "..",
-                        "CORRECTNESS_r14.json")
-    recorded = frozenset(json.load(open(path)).keys())
-    assert reg._R14_DRIVER_SEEN == recorded
-
-
-def test_r13_seen_set_matches_correctness_file():
-    """_R13_DRIVER_SEEN must equal the keys of CORRECTNESS_r13.json —
-    the bookkeeping the staleness ordering rests on."""
-    import json
-    import os
-    path = os.path.join(os.path.dirname(__file__), "..",
-                        "CORRECTNESS_r13.json")
-    recorded = frozenset(json.load(open(path)).keys())
-    assert reg._R13_DRIVER_SEEN == recorded
+    """Past the front, entries run oldest newest-round first (ties in
+    registration order), so no entry past the cap is staler than one
+    inside it."""
+    names = list(reg.queries())
+    newest = em.newest_rounds(names)
+    order = list(em.queries())
+    pos = {k: i for i, k in enumerate(names)}
+    rest = order[len(_front(names, newest)):]
+    assert rest == sorted(rest, key=lambda k: (newest[k], pos[k]))
+    inside = [newest[k] for k in order[:em.SWEEP_CAP] if k in rest]
+    for k in order[em.SWEEP_CAP:]:
+        assert not inside or newest[k] >= max(inside), k
 
 
 def test_oracles_and_queries_share_the_exact_order():
+    assert list(em.queries()) == list(em.oracle_sql())
     assert list(reg.queries()) == list(reg.oracle_sql())
+
+
+def test_front_over_cap_warns_and_names_spill(tmp_path, monkeypatch):
+    names = [f"e{i:03d}" for i in range(em.SWEEP_CAP + 5)]
+    _write_round(str(tmp_path), 1, ["seen"])
+    monkeypatch.setattr(em, "TOUCHED", ("e054", "e000"))
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        order = em.sweep_order(names + ["seen"], root=str(tmp_path))
+    assert order[:2] == ["e054", "e000"] and order[-1] == "seen"
+    spill = order[em.SWEEP_CAP:-1]
+    assert spill == names[em.SWEEP_CAP - 1:-1]
+    msgs = [str(x.message) for x in w if "exceeds" in str(x.message)]
+    assert len(msgs) == 1 and all(repr(k) in msgs[0] for k in spill)
+
+
+def test_registration_order_without_correctness_files(tmp_path):
+    names = list(reg.queries())
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert em.sweep_order(names, root=str(tmp_path)) == names
+
+
+def test_newest_round_is_max_over_correctness_files(tmp_path):
+    root = str(tmp_path)
+    _write_round(root, 2, ["a", "b"])
+    _write_round(root, 11, ["b", "c"])
+    _write_round(root, 7, ["a", "c", "unknown"])
+    assert em.newest_rounds(["a", "b", "c", "d"], root=root) == {
+        "a": 7, "b": 11, "c": 11, "d": 0}
+    # the committed files: each entry's newest round is the largest
+    # round number among the files whose keys contain it
+    recorded = {}
+    for rnd, path in em._round_files(os.path.dirname(em.__file__)).items():
+        with open(path) as fh:
+            for k in json.load(fh):
+                recorded.setdefault(k, []).append(rnd)
+    newest = em.newest_rounds(reg.queries())
+    for k, rnd in newest.items():
+        assert rnd == max(recorded.get(k, [0])), k

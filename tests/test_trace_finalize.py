@@ -12,6 +12,7 @@ import hashlib
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from skywalking_banyandb_spark.catalog import TraceSchema
@@ -23,6 +24,8 @@ from skywalking_banyandb_spark.sources.trace_finalize import (
     keep_slow_traces,
 )
 from skywalking_banyandb_spark.sources.writer import write_trace
+
+from conftest import HAVE_REFERENCE, REFERENCE_CASES, REFERENCE_MISSING
 
 
 def _schema():
@@ -234,6 +237,7 @@ def test_reference_tracepipeline_merge_filter_replay(spark, tmp_path):
     assert stats["dropped_traces"] == 2 and stats["kept_traces"] == 5
 
 
+@pytest.mark.skipif(not HAVE_REFERENCE, reason=REFERENCE_MISSING)
 def test_tracepipeline_query_inputs_verbatim(spark, tmp_path):
     """VERBATIM replay of the trace-pipeline QUERY corpus — the seven
     ``test/cases/tracepipeline/data/input/t_*.yml`` files (and their
@@ -283,7 +287,7 @@ def test_tracepipeline_query_inputs_verbatim(spark, tmp_path):
     cat = Catalog()
     cat.register(twin)
 
-    indir = "/root/reference/test/cases/tracepipeline/data/input"
+    indir = f"{REFERENCE_CASES}/tracepipeline/data/input"
     t0, t1 = f"{H.isoformat()}Z", f"{(H + dt.timedelta(days=1)).isoformat()}Z"
 
     def load(name):
