@@ -57,7 +57,15 @@ def entry(spark: SparkSession) -> DataFrame:
 # this round (TOUCHED, edited by hand each round), then entries no round
 # has recorded, then the rest with the oldest newest-round first.
 SWEEP_CAP = 50
-TOUCHED = ("request_yaml_trace",)
+TOUCHED = (
+    "request_yaml_trace",
+    "tpch_q21_sole_delayed",
+    "measure_multigroup_schema_merge",
+    "stream_multigroup_schema_merge",
+    "trace_multigroup_schema_merge",
+    "measure_multigroup_union",
+    "topn_multigroup_postagg_max",
+)
 _ROUND_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
 

@@ -84,12 +84,6 @@ ENTRIES = [
     ("quality_charlm_typicality", "noop"),
     ("quality_repetition", "noop"),
     ("quality_tfidf_top_terms", "noop"),
-    # r16 (VERDICT r15 Next #6): the post-rewrite one-scan Q21 against
-    # the r14 EXISTS/NOT-EXISTS form it replaced — "one scan vs three
-    # at sf1 is exactly the claim the rewrite makes; measure it". A
-    # staged runner so both shapes are timed over the same generated
-    # lineitem/orders (the base corpus has no TPC-H tables).
-    ("tpch_q21_shape", "staged"),
 ]
 # entries whose sf1 pass count is 1 (quadratic answer volume)
 SINGLE_PASS_AT_SF1 = {"dedup_minhash_lsh_agg", "dedup_substring_winnow"}
@@ -153,60 +147,6 @@ def gen_corpus(out_dir: str, sf: float, seed: int = SEED) -> None:
         "props": [f'{{"k": {int(k)}}}'
                   for k in rng.integers(0, 100, size=n_ev)],
     }).to_parquet(os.path.join(out_dir, "events.parquet"), index=False)
-    with open(done, "w") as f:
-        f.write("ok")
-
-
-def gen_tpch(out_dir: str, sf: float, seed: int = SEED) -> None:
-    """Seed-fixed lineitem/orders at the TESTDATA.md shape (600k/150k
-    rows per sf) — only the columns Q21 touches carry structure; the
-    rest mirror the driver schema so read_table sees the same layout.
-    Separate _DONE marker: corpora generated by earlier rounds (no TPC-H
-    tables) extend in place instead of regenerating everything."""
-    import numpy as np
-    import pandas as pd
-
-    done = os.path.join(out_dir, "_DONE_TPCH")
-    if os.path.exists(done):
-        return
-    os.makedirs(out_dir, exist_ok=True)
-    rng = np.random.default_rng(seed + 1)
-
-    n_ord = max(1500, int(150_000 * sf))
-    n_li = n_ord * 4
-    n_supp = max(100, int(1_000 * sf))
-    t0 = np.datetime64("1995-01-01T00:00:00")
-    odate = t0 + (rng.integers(0, 365, size=n_ord) * 86_400_000_000
-                  ).astype("timedelta64[us]")
-    pd.DataFrame({
-        "o_orderkey": np.arange(n_ord, dtype="int64"),
-        "o_custkey": rng.integers(0, n_ord // 10 + 1, n_ord),
-        "o_orderstatus": rng.choice(["F", "O", "P"], n_ord),
-        "o_totalprice": np.round(rng.uniform(1e3, 3e5, n_ord), 2),
-        "o_orderdate": odate,
-        "o_orderpriority": rng.choice(
-            ["1-URGENT", "2-HIGH", "3-MEDIUM"], n_ord),
-    }).to_parquet(os.path.join(out_dir, "orders.parquet"), index=False)
-
-    okey = rng.integers(0, n_ord, size=n_li)
-    # ship 0..120 days after the order date: ~half the lines cross the
-    # 60-day delay cutoff, so both Q21 aggregation levels do real work
-    sdate = (odate[okey]
-             + (rng.integers(0, 121, size=n_li) * 86_400_000_000
-                ).astype("timedelta64[us]"))
-    pd.DataFrame({
-        "l_orderkey": okey.astype("int64"),
-        "l_partkey": rng.integers(0, 20_000, n_li),
-        "l_suppkey": rng.integers(0, n_supp, n_li).astype("int64"),
-        "l_linenumber": rng.integers(1, 8, n_li).astype("int32"),
-        "l_quantity": rng.integers(1, 51, n_li).astype("float64"),
-        "l_extendedprice": np.round(rng.uniform(1e2, 1e5, n_li), 2),
-        "l_discount": np.round(rng.uniform(0, 0.1, n_li), 2),
-        "l_tax": np.round(rng.uniform(0, 0.08, n_li), 2),
-        "l_returnflag": rng.choice(["A", "N", "R"], n_li),
-        "l_linestatus": rng.choice(["F", "O"], n_li),
-        "l_shipdate": sdate,
-    }).to_parquet(os.path.join(out_dir, "lineitem.parquet"), index=False)
     with open(done, "w") as f:
         f.write("ok")
 
@@ -283,54 +223,6 @@ def _time_streaming_resolution(spark, qs, sf_dir: str) -> dict:
             "survivors": len(rows)}
 
 
-def _time_q21_shapes(spark, qs, sf_dir: str) -> dict:
-    """Committed one-scan Q21 vs the r14 EXISTS/NOT-EXISTS form it
-    replaced, both noop-sunk over the same generated lineitem/orders.
-    `steady_sec` carries the committed form (so the family's exponent
-    describes the shipped plan); `exists_sec` the replaced one."""
-    from skywalking_banyandb_spark.registry_analytics import _Q21_SQL
-    from skywalking_banyandb_spark.sources.parquet import read_table
-
-    # --validate passes the REAL (read-only) sf0.1 dir, which already
-    # has TPC-H tables — only generate into our own gen_sf* corpora
-    if not os.path.exists(os.path.join(sf_dir, "lineitem.parquet")):
-        gen_tpch(sf_dir, _current_gen_sf(sf_dir))
-    rec: dict = {}
-    for key, build in (
-        ("steady_sec",
-         lambda: qs["tpch_q21_sole_delayed"](spark, sf_dir)),
-        ("exists_sec", lambda: _q21_exists(spark, sf_dir, _Q21_SQL,
-                                           read_table)),
-    ):
-        best = None
-        build().write.format("noop").mode("overwrite").save()  # warm
-        for _ in range(2):
-            t0 = time.perf_counter()
-            build().write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            best = dt if best is None or dt < best else best
-        rec[key] = round(best, 3)
-    return rec
-
-
-def _q21_exists(spark, sf_dir, sql, read_table):
-    read_table(spark, f"{sf_dir}/lineitem.parquet") \
-        .createOrReplaceTempView("lineitem")
-    read_table(spark, f"{sf_dir}/orders.parquet") \
-        .createOrReplaceTempView("orders")
-    return spark.sql(sql)
-
-
-def _current_gen_sf(sf_dir: str) -> float:
-    # gen dirs are named gen_sf{sf}; the staged runner needs the sf to
-    # size the TPC-H extension of an already-generated corpus
-    base = os.path.basename(os.path.normpath(sf_dir))
-    try:
-        return float(base.replace("gen_sf", ""))
-    except ValueError:
-        return 0.1
-
-
 # lifecycle families re-run their whole build/absorb/stream per pass in
 # fresh scratch — there is no warm steady state to separate, so one
 # cold pass per measurement and min over `passes` repetitions
@@ -338,7 +230,6 @@ STAGED = {
     "mhidx_compaction_lifecycle":
         lambda spark, qs, d: _time_compaction_lifecycle(spark, d),
     "streaming_resolution_loop": _time_streaming_resolution,
-    "tpch_q21_shape": _time_q21_shapes,
 }
 
 

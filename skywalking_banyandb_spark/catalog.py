@@ -532,10 +532,12 @@ def merged_schema(catalog: Catalog, groups, kind: str, name: str):
     (and fields, for measures) present in only some groups join the
     merged declaration and NULL-fill in the others
     (``measure_plan_merge.go:39-176`` / ``logical/measure/schema.go``
-    mergeSchema; the stream/trace merge planners behave alike). This is
-    the schema multi-group RESPONSES shape against: a tag only a later
-    group declares (``multi_group_new_tag``) must still appear in the
-    envelope's tag families."""
+    mergeSchema; the stream/trace merge planners behave alike). The one
+    place tag/field lists merge across groups: the multi-group read path
+    (``operators.merge.resolve_groups``) compiles against it, and
+    multi-group RESPONSES shape against it — a tag only a later group
+    declares (``multi_group_new_tag``) must still appear in the envelope's
+    tag families."""
     import dataclasses
 
     schemas = catalog.get_many(groups, kind, name)

@@ -34,13 +34,13 @@ from typing import Dict, List, Optional
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import Catalog, MeasureSchema, materialize_derived
+from ..catalog import Catalog, MeasureSchema
 from ..errors import QueryAnalyzeError
 from ..model import AggFunc, MeasureQuery, Sort, DEFAULT_LIMIT
-from ..sources.parquet import read_table
+from ..sources.parquet import in_range, prune_ts_buckets
 from ..operators.criteria import compile_criteria, criteria_tags, types_of
 from ..operators.dedup import latest_version
-from ..operators.merge import union_groups
+from ..operators.merge import read_group, resolve_groups, scan_groups
 from ..operators.topk import limit_offset, top_n
 
 
@@ -80,51 +80,26 @@ def _needed_columns(schema: MeasureSchema, q: MeasureQuery) -> List[str]:
     return [c for c in need]
 
 
-def _scan_one(spark: SparkSession, schema: MeasureSchema, q: MeasureQuery) -> DataFrame:
-    if schema.table:
-        # entity-bucketed catalog table (write_measure_bucketed): the scan
-        # carries the persisted hash distribution, so the dedup/group-by
-        # below run without an Exchange; ts_bucket predicates prune segments
-        from ..sources.parquet import prune_ts_buckets
+def _read(spark: SparkSession, schema: MeasureSchema, q: MeasureQuery) -> DataFrame:
+    if not schema.table:
+        return read_group(spark, schema, q)
+    # entity-bucketed catalog table (write_measure_bucketed): the scan
+    # carries the persisted hash distribution, so the dedup/group-by
+    # below run without an Exchange; ts_bucket predicates prune segments
+    begin, end = q.time_range.begin, q.time_range.end
+    df = in_range(spark.table(schema.table), schema.ts_column, begin, end)
+    return prune_ts_buckets(df, begin, end)
 
-        df = spark.table(schema.table)
-        begin, end = q.time_range.begin, q.time_range.end
-        if begin is not None:
-            df = df.where(F.col(schema.ts_column) >= F.lit(begin))
-        if end is not None:
-            df = df.where(F.col(schema.ts_column) < F.lit(end))
-        df = prune_ts_buckets(df, begin, end)
-    else:
-        from ..catalog import resolve_stage_paths
 
-        # half-open [begin, end) applied on the raw scan column (pushdown-able)
-        df = read_table(
-            spark,
-            *resolve_stage_paths(schema, q.stages),
-            time_range=(schema.ts_column, q.time_range.begin, q.time_range.end),
-        )
-    df = materialize_derived(df, schema)
-    # restrict to columns this group's schema DECLARES: a physical file may
-    # carry more columns than the schema (shared files, schema evolution),
-    # and undeclared ones must come back NULL-filled by the multi-group
-    # union, not leak through ("multi groups: new tag and fields")
-    declared = {schema.ts_column, *schema.entity}
-    if schema.version_column:
-        declared.add(schema.version_column)
-    declared |= {t.name for t in schema.tags} | {f.name for f in schema.fields}
-    keep = [
-        c for c in _needed_columns(schema, q)
-        if c in declared and c in df.columns
-    ]
-    df = df.select(*keep)
+def _latest(df: DataFrame, schema: MeasureSchema) -> DataFrame:
     if (
         not schema.index_mode
         and schema.version_column
         and schema.version_column in df.columns
     ):
-        df = latest_version(df, schema.entity, schema.ts_column, schema.version_column)
-    elif schema.index_mode and schema.version_column:
-        df = df.drop(schema.version_column)
+        return latest_version(df, schema.entity, schema.ts_column, schema.version_column)
+    if schema.index_mode and schema.version_column:
+        return df.drop(schema.version_column)
     return df
 
 
@@ -150,47 +125,28 @@ def agg_expr(func: AggFunc, field: str, field_type: str) -> Column:
 
 
 def compile_measure(spark: SparkSession, catalog: Catalog, q: MeasureQuery) -> DataFrame:
-    schemas: List[MeasureSchema] = catalog.get_many(q.groups, "measure", q.name)
-    if q.group_mod_revisions:
-        catalog.check_revisions(q.group_mod_revisions)
-        # revision-pinned (schema-aware) clients also opt into the
-        # created_at clamp — reference 0.11, catalog.clamp_time_range_begin
-        from dataclasses import replace
-
-        from ..catalog import clamp_time_range_begin
-
-        q = replace(q, time_range=clamp_time_range_begin(schemas, q.time_range))
-    ref = schemas[0]
-    # merged logical schema across groups — first declaration wins; tags
-    # and fields present in only some groups NULL-fill in the others
-    # ("multi groups: new tag and fields", measure_plan_merge.go:39-176 /
-    # logical/measure/schema.go mergeSchema)
-    tagmap = _schema_tagmap(ref)
-    types = types_of(ref)
-    for s in schemas[1:]:
-        for t in s.tags:
-            if t.name not in tagmap:
-                tagmap[t.name] = t.analyzer
-                types[t.name] = t.type
-        for f in s.fields:
-            tagmap.setdefault(f.name, None)
+    g = resolve_groups(catalog, q, "measure")
+    q, ref, merged = g.q, g.schemas[0], g.merged
+    tagmap = _schema_tagmap(merged)
 
     # validate projections/group keys at analyze time (reference behavior)
     for name in [*q.tag_projection, *q.group_by]:
         if name not in tagmap:
             raise QueryAnalyzeError(f"projection references unknown tag {name!r}")
     for name in q.field_projection:
-        if all(s.field(name) is None for s in schemas):
+        if merged.field(name) is None:
             raise QueryAnalyzeError(f"projection references unknown field {name!r}")
 
-    pred = compile_criteria(q.criteria, tagmap, types)
-    parts = []
-    for s in schemas:
-        df = _scan_one(spark, s, q)
-        if pred is not None:
-            df = df.where(pred)
-        parts.append(df)
-    df = union_groups(parts)
+    pred = compile_criteria(q.criteria, tagmap, types_of(merged))
+
+    def each(df: DataFrame, s: MeasureSchema, _i: int) -> DataFrame:
+        # version dedup BEFORE the predicate: a newer version that fails
+        # the filter must still shadow the older one
+        df = _latest(df, s)
+        return df if pred is None else df.where(pred)
+
+    df = scan_groups(spark, g, each, columns=lambda s: _needed_columns(s, q),
+                     read=_read)
 
     if q.agg is not None or q.group_by:
         fspec = ref.field(q.agg.field_name) if q.agg else None
@@ -224,9 +180,8 @@ def compile_measure(spark: SparkSession, catalog: Catalog, q: MeasureQuery) -> D
         # exclusion is FIELD-ONLY names: a name some merged group
         # declares as a tag stays projectable even if another group
         # reuses it as a field name (multi-group merge keeps the tag).
-        tag_names = {t.name for s in schemas for t in s.tags}
-        field_only = {f.name for s in schemas
-                      for f in s.fields} - tag_names
+        field_only = ({f.name for f in merged.fields}
+                      - {t.name for t in merged.tags})
         # ... and the aggregated field's name is excluded UNCONDITIONALLY
         # (even if a merged group also declares it as a tag): the agg
         # output owns that alias in the grouped result.

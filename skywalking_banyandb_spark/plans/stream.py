@@ -10,19 +10,17 @@ column); we stay accepting of all reference-legal queries.
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional
+from typing import Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import Catalog, StreamSchema, materialize_derived
+from ..catalog import Catalog, StreamSchema
 from ..errors import QueryAnalyzeError
-from ..model import Sort, StreamQuery, DEFAULT_LIMIT
-from ..sources.parquet import read_table
-from ..model import BinaryOp
+from ..model import BinaryOp, Sort, StreamQuery, DEFAULT_LIMIT
 from ..operators.criteria import compile_criteria, conditions_of, qcol, types_of
 from ..operators.dedup import distinct_element
-from ..operators.merge import union_groups
+from ..operators.merge import resolve_groups, scan_groups
 from ..operators.topk import limit_offset
 
 
@@ -37,34 +35,9 @@ def _tagmap(schema: StreamSchema) -> Dict[str, Optional[str]]:
 
 
 def compile_stream(spark: SparkSession, catalog: Catalog, q: StreamQuery) -> DataFrame:
-    schemas: List[StreamSchema] = catalog.get_many(q.groups, "stream", q.name)
-    if q.group_mod_revisions:
-        catalog.check_revisions(q.group_mod_revisions)
-        # revision-pinned clients opt into the created_at clamp
-        # (reference 0.11; test/cases/schema/clamp.go drives the stream path)
-        from dataclasses import replace
-
-        from ..catalog import clamp_time_range_begin
-
-        q = replace(q, time_range=clamp_time_range_begin(schemas, q.time_range))
-    ref = schemas[0]
-    # merged logical schema across groups — first declaration wins; tags
-    # present in only some groups come back NULL-filled for the others
-    # ("multi groups: new tag and fields",
-    # pkg/query/logical/stream/stream_plan_merge.go mergeSchema)
-    tagmap = _tagmap(ref)
-    types = types_of(ref)
-    merged_tags = list(ref.tags)
-    for s in schemas[1:]:
-        for t in s.tags:
-            if t.name not in tagmap:
-                tagmap[t.name] = t.analyzer
-                types[t.name] = t.type
-                merged_tags.append(t)
-    hetero = any(
-        {t.name for t in s.tags} != {t.name for t in ref.tags}
-        for s in schemas[1:]
-    )
+    g = resolve_groups(catalog, q, "stream")
+    q, ref, merged = g.q, g.schemas[0], g.merged
+    tagmap = _tagmap(merged)
     for name in q.projection:
         if name not in tagmap:
             raise QueryAnalyzeError(f"projection references unknown tag {name!r}")
@@ -77,47 +50,24 @@ def compile_stream(spark: SparkSession, catalog: Catalog, q: StreamQuery) -> Dat
                     f"operation {c.op.name} is unsupported on entity tag "
                     f"{c.tag!r} (only EQ and IN hit the series index)"
                 )
-    pred = compile_criteria(q.criteria, tagmap, types)
+    pred = compile_criteria(q.criteria, tagmap, types_of(merged))
 
-    from ..catalog import TAG_TYPE_TO_SPARK, resolve_stage_paths
-
-    crit_tags = {c.tag for c in conditions_of(q.criteria)}
-    parts = []
-    for i, s in enumerate(schemas):
-        df = read_table(
-            spark, *resolve_stage_paths(s, q.stages),
-            time_range=(s.ts_column, q.time_range.begin, q.time_range.end),
-        )
-        df = materialize_derived(df, s)
-        if hetero:
-            # restrict the scan to the columns THIS group's schema declares
-            # (shared files may carry more; undeclared ones must come back
-            # NULL-filled by the union, not leak through), then pad typed
-            # NULLs for criteria tags the group lacks so the filter applies
-            # NULL semantics (EQ/IN on a missing tag matches nothing).
-            declared = {s.ts_column, s.element_id_column}
-            declared |= {t.name for t in s.tags}
-            df = df.select(*[qcol(c) for c in df.columns if c in declared])
-            group_tags = {t.name for t in s.tags}
-            for t in merged_tags:
-                if t.name in crit_tags and t.name not in group_tags:
-                    df = df.withColumn(
-                        t.name,
-                        F.lit(None).cast(TAG_TYPE_TO_SPARK[t.type]))
+    def each(df: DataFrame, _s: StreamSchema, i: int) -> DataFrame:
         if pred is not None:
             df = df.where(pred)
-        if hetero:
+        if g.hetero:
             # group ordinal: the merged iterator emits the FIRST group's
             # copy of an element id (deterministic dedup preference below)
             df = df.withColumn("_g_ord", F.lit(i))
-        parts.append(df)
-    df = union_groups(parts)
+        return df
+
+    df = scan_groups(spark, g, each)
     df = distinct_element(
-        df, ref.element_id_column, prefer_min="_g_ord" if hetero else None)
+        df, ref.element_id_column, prefer_min="_g_ord" if g.hetero else None)
 
     # default projection = the physical tags; derived tags appear only when
     # explicitly projected (like index content in the reference)
-    proj = list(q.projection) or [t.name for t in merged_tags if t.expr is None]
+    proj = list(q.projection) or [t.name for t in merged.tags if t.expr is None]
     keep = [ref.ts_column, ref.element_id_column] + [
         c for c in proj if c not in (ref.ts_column, ref.element_id_column)
     ]

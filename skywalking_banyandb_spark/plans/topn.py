@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from ..catalog import Catalog, MeasureSchema
 from ..errors import QueryAnalyzeError
 from ..model import AggFunc, BinaryOp, Sort, TopNQuery
-from ..sources.parquet import read_table
+from ..sources.parquet import in_range, read_table
 from ..operators.criteria import compile_condition, compile_criteria, qcol
 from ..operators.topk import per_window_top_n, top_n
 from .measure import agg_expr
@@ -261,12 +261,8 @@ def compile_topn(
             df = materialize_topn(
                 spark, s, field, q.top_n, window, q.sort, stages=q.stages
             )
-        ts = F.col("window_start")
-        if q.time_range.begin is not None:
-            df = df.where(ts >= F.lit(q.time_range.begin))
-        if q.time_range.end is not None:
-            df = df.where(ts < F.lit(q.time_range.end))
-        parts.append(df)
+        parts.append(
+            in_range(df, "window_start", q.time_range.begin, q.time_range.end))
     from ..operators.merge import union_groups
 
     df = union_groups(parts)
@@ -307,12 +303,8 @@ def _compile_topn_resolved(
             group_tags=d.group_by_tags,
             counters_number=d.counters_number,
         )
-        ts = F.col("window_start")
-        if q.time_range.begin is not None:
-            df = df.where(ts >= F.lit(q.time_range.begin))
-        if q.time_range.end is not None:
-            df = df.where(ts < F.lit(q.time_range.end))
-        parts.append(df)
+        parts.append(
+            in_range(df, "window_start", q.time_range.begin, q.time_range.end))
     from ..operators.merge import union_groups
 
     df = union_groups(parts)

@@ -24,17 +24,16 @@ At 100 TB phase 1 shuffles O(#traces) tiny rows; the payload
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional
+from typing import Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import Catalog, TraceSchema, materialize_derived
+from ..catalog import Catalog, TraceSchema
 from ..errors import QueryAnalyzeError
 from ..model import Sort, TraceQuery, DEFAULT_LIMIT
-from ..sources.parquet import read_table
-from ..operators.criteria import compile_criteria, conditions_of, qcol, types_of
-from ..operators.merge import union_groups
+from ..operators.criteria import compile_criteria, qcol, types_of
+from ..operators.merge import resolve_groups, scan_groups
 from ..operators.topk import limit_offset
 
 
@@ -82,64 +81,21 @@ def _order_key(ref: TraceSchema, q: TraceQuery):
 
 
 def compile_trace(spark: SparkSession, catalog: Catalog, q: TraceQuery) -> DataFrame:
-    schemas: List[TraceSchema] = catalog.get_many(q.groups, "trace", q.name)
-    if q.group_mod_revisions:
-        catalog.check_revisions(q.group_mod_revisions)
-        # revision-pinned clients opt into the created_at clamp
-        # (reference 0.11; catalog.clamp_time_range_begin)
-        from dataclasses import replace
+    g = resolve_groups(catalog, q, "trace")
+    q, ref, merged = g.q, g.schemas[0], g.merged
+    tagmap = _tagmap(merged)
+    pred = compile_criteria(q.criteria, tagmap, types_of(merged))
 
-        from ..catalog import clamp_time_range_begin
-
-        q = replace(q, time_range=clamp_time_range_begin(schemas, q.time_range))
-    ref = schemas[0]
-    # merged logical schema across groups (cross_group_merge.go:35-131):
-    # tags declared by only some groups NULL-fill in the others' spans
-    tagmap = _tagmap(ref)
-    types = types_of(ref)
-    merged_tags = list(ref.tags)
-    for s in schemas[1:]:
-        for t in s.tags:
-            if t.name not in tagmap:
-                tagmap[t.name] = t.analyzer
-                types[t.name] = t.type
-                merged_tags.append(t)
-    hetero = any(
-        {t.name for t in s.tags} != {t.name for t in ref.tags}
-        for s in schemas[1:]
-    )
-    pred = compile_criteria(q.criteria, tagmap, types)
-
-    from ..catalog import TAG_TYPE_TO_SPARK, resolve_stage_paths
-
-    crit_tags = {c.tag for c in conditions_of(q.criteria)}
-    parts = []
-    for s in schemas:
-        df = read_table(
-            spark, *resolve_stage_paths(s, q.stages),
-            time_range=(s.ts_column, q.time_range.begin, q.time_range.end),
-        )
-        df = materialize_derived(df, s)
-        if hetero:
-            declared = {s.ts_column, s.trace_id_column, s.span_id_column}
-            declared |= {t.name for t in s.tags}
-            if s.span_column:
-                declared.add(s.span_column)
-            df = df.select(*[qcol(c) for c in df.columns if c in declared])
-            group_tags = {t.name for t in s.tags}
-            for t in merged_tags:
-                if t.name in crit_tags and t.name not in group_tags:
-                    df = df.withColumn(
-                        t.name,
-                        F.lit(None).cast(TAG_TYPE_TO_SPARK[t.type]))
+    def each(df: DataFrame, s: TraceSchema, _i: int) -> DataFrame:
         if pred is not None:
             df = df.where(pred)
         if q.trace_ids:
             df = df.where(F.col(s.trace_id_column).isin(*list(q.trace_ids)))
-        parts.append(df)
+        return df
+
     tid_col = ref.trace_id_column
     # a span without a trace id belongs to no trace
-    df = union_groups(parts).where(F.col(tid_col).isNotNull())
+    df = scan_groups(spark, g, each).where(F.col(tid_col).isNotNull())
     key_agg, desc = _order_key(ref, q)
     limit = q.limit if q.limit is not None else DEFAULT_LIMIT
 
@@ -180,11 +136,11 @@ def compile_trace(spark: SparkSession, catalog: Catalog, q: TraceQuery) -> DataF
                 raise QueryAnalyzeError(
                     f"projection references unknown tag {name!r}"
                 )
-        tag_cols = [t.name for t in merged_tags if t.name in set(q.projection)]
+        tag_cols = [t.name for t in merged.tags if t.name in set(q.projection)]
     else:
         # default projection = physical tags only (derived tags appear when
         # explicitly projected, like the other three plan kinds)
-        tag_cols = [t.name for t in merged_tags if t.expr is None]
+        tag_cols = [t.name for t in merged.tags if t.expr is None]
     span_payload = [ref.ts_column, ref.span_id_column] + tag_cols
     if ref.span_column:
         span_payload.append(ref.span_column)

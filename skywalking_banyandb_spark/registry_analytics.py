@@ -767,65 +767,12 @@ GROUP BY l1.l_suppkey ORDER BY numwait DESC, suppkey LIMIT 10
 
 def _tpch_q21(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q21 shape — suppliers who were the SOLE delayed supplier of a
-    multi-supplier order.
-
-    r15 (guide §1.2 "the distributed algorithm" / §2.4): the literal
-    EXISTS / NOT EXISTS form decorrelates to LeftSemi + LeftAnti
-    equi-joins, which is scale-safe but scans lineitem THREE times and
-    joins orders twice (r15 profile: three broadcast builds over parsed
-    lineitem, 72–154 ms collect each — broadcast-build bound). Every
-    predicate is per-ORDER, so one scan suffices: per (order, supplier)
-    count the delayed rows, then per order derive (#suppliers, #delayed
-    suppliers, the sole delayed supplier's key and row count); an l1 row
-    survives the original WHERE iff its order has exactly one delayed
-    supplier and >= 2 suppliers, and the surviving rows per order are
-    exactly that supplier's delayed rows. NULL-exactness with the SQL
-    form: a NULL l_suppkey row can never satisfy either `<>` correlate
-    (as l1, l2 or l3), so filtering NULL suppkeys upfront is identity;
-    a NULL date makes `delayed` NULL, which counts as not-delayed in
-    both forms. Equivalence is oracle-proven (the DuckDB twin keeps the
-    literal EXISTS form) at sf0.01 and sf0.1; plan: 3 lineitem scans ->
-    1, four joins -> one orders equi-join + two aggregations sharing one
-    l_orderkey exchange (paired sf0.1 steady 1.16 s -> 1.17 s — local
-    broadcast hid the triple scan's cost; the win is the 100 TB shape,
-    where lineitem cannot broadcast and the EXISTS form decorrelates to
-    three full scans + two wide sort-merge joins)."""
-    l = read_table(spark, f"{sf}/lineitem.parquet")
-    o = read_table(spark, f"{sf}/orders.parquet")
-    delayed = (
-        F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
-    ).cast("int")
-    per_os = (
-        l.where(F.col("l_suppkey").isNotNull())
-        .select("l_orderkey", "l_suppkey", "l_shipdate")
-        .join(o.select("o_orderkey", "o_orderdate"),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        # one exchange serves both aggregation levels: hash-partitioning on
-        # l_orderkey alone satisfies the (l_orderkey, l_suppkey) clustering
-        # of the first groupBy AND the l_orderkey clustering of the second,
-        # so the per-(order,supplier) and per-order aggregates run in the
-        # same stage (3 Exchange -> 2; partial agg saved nothing here
-        # anyway — (order,supplier) groups are nearly distinct per row)
-        .repartition(F.col("l_orderkey"))
-        .groupBy("l_orderkey", "l_suppkey")
-        .agg(F.coalesce(F.sum(delayed), F.lit(0)).alias("_dcnt"))
-    )
-    per_o = (
-        per_os.groupBy("l_orderkey")
-        .agg(
-            F.count(F.lit(1)).alias("_nsupp"),
-            F.count_if(F.col("_dcnt") > 0).alias("_ndel"),
-            F.max(F.when(F.col("_dcnt") > 0, F.col("l_suppkey"))).alias("suppkey"),
-            F.max(F.when(F.col("_dcnt") > 0, F.col("_dcnt"))).alias("_cnt"),
-        )
-    )
-    return (
-        per_o.where((F.col("_ndel") == 1) & (F.col("_nsupp") >= 2))
-        .groupBy("suppkey")
-        .agg(F.sum("_cnt").alias("numwait"))
-        .orderBy(F.col("numwait").desc(), F.col("suppkey"))
-        .limit(10)
-    )
+    multi-supplier order. The EXISTS / NOT EXISTS predicates decorrelate
+    to LeftSemi + LeftAnti equi-joins on l_orderkey (plan gate:
+    tests/test_plan_quality.py). A one-scan aggregate rewrite was measured
+    slower at sf0.01, 0.1 and 1 (SCALE.md) and is not used."""
+    _tpch_views(spark, sf, "lineitem", "orders")
+    return spark.sql(_Q21_SQL)
 
 
 register("tpch_q21_sole_delayed", _tpch_q21, _Q21_SQL)

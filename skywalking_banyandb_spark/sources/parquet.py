@@ -19,8 +19,10 @@ writer emits, not from row-level filters).
 
 from __future__ import annotations
 
+import os
 from functools import lru_cache
 from typing import Tuple
+from urllib.parse import unquote, urlparse
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -41,7 +43,6 @@ def _nano_ts_columns(path: str) -> Tuple[str, ...]:
     except Exception:
         # directory dataset: sniff the first fragment
         import glob
-        import os
 
         frags = sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
         if not frags:
@@ -101,19 +102,10 @@ def read_table(
 
     if time_range is not None:
         ts_col, begin, end = time_range
+        lo, hi = begin, end
         if ts_col in nano_cols:
-            if begin is not None:
-                df = df.where(F.col(ts_col) >= F.lit(_epoch_nanos(begin)))
-            if end is not None:
-                df = df.where(F.col(ts_col) < F.lit(_epoch_nanos(end)))
-        else:
-            if begin is not None:
-                df = df.where(F.col(ts_col) >= F.lit(begin))
-            if end is not None:
-                df = df.where(F.col(ts_col) < F.lit(end))
-
-    if time_range is not None:
-        df = prune_ts_buckets(df, time_range[1], time_range[2])
+            lo, hi = (None if t is None else _epoch_nanos(t) for t in (begin, end))
+        df = prune_ts_buckets(in_range(df, ts_col, lo, hi), begin, end)
 
     for c in nano_cols:
         if c in df.columns:
@@ -161,12 +153,28 @@ def spread_scan(df: DataFrame) -> DataFrame:
     return df
 
 
+def _row_group_count(uri: str) -> int:
+    """Row groups of one ``inputFiles()`` URI. Local files are probed by
+    footer; any other scheme counts as one split, so the file count alone
+    bounds the probe. Unreadable footers fall to the same safe floor."""
+    u = urlparse(uri)
+    if u.scheme not in ("", "file"):
+        return 1
+    path = unquote(u.path) if u.scheme else uri
+    try:
+        st = os.stat(path)
+    except OSError:
+        return 1
+    return _footer_row_groups(path, st.st_mtime_ns, st.st_size)
+
+
 @lru_cache(maxsize=4096)
-def _row_group_count(path: str) -> int:
+def _footer_row_groups(path: str, mtime_ns: int, size: int) -> int:
+    # (mtime, size) in the key: a file rewritten in place is re-read
     try:
         return max(1, pq.ParquetFile(path).metadata.num_row_groups)
     except Exception:
-        return 1  # unreadable footer: assume one split, the safe floor
+        return 1
 
 
 def _planned_scan_tasks(df: DataFrame, target: int) -> int:
@@ -177,10 +185,19 @@ def _planned_scan_tasks(df: DataFrame, target: int) -> int:
         return target  # >= 1 row group per file: enough splits already
     total = 0
     for f in files:
-        total += _row_group_count(f.removeprefix("file:"))
+        total += _row_group_count(f)
         if total >= target:
             return total
     return total
+
+
+def in_range(df: DataFrame, column: str, begin, end) -> DataFrame:
+    """Half-open ``[begin, end)`` on ``column``; a None bound is open."""
+    if begin is not None:
+        df = df.where(F.col(column) >= F.lit(begin))
+    if end is not None:
+        df = df.where(F.col(column) < F.lit(end))
+    return df
 
 
 def prune_ts_buckets(df: DataFrame, begin, end) -> DataFrame:

@@ -821,6 +821,31 @@ limit: 100000
     _run_dual(env, df, sql, False)
 
 
+@pytest.mark.parametrize("groups", [("g1", "g3"), ("g3", "g1")])
+def test_measure_multi_group_criteria_on_missing_tag(env, groups):
+    """Criteria on ``props``, which g3 does not declare: g3's scan pads it
+    as a typed NULL, so EQ matches nothing there and only g1's rows come
+    back (the stream/trace rule), in either group order."""
+    spark, cat, con = env
+    q = load_measure_request(f"""name: "metrics"\ngroups: {list(groups)}\n{TIME_RANGE}
+tagProjection:
+  tagFamilies:
+  - name: "default"
+    tags: ["user_id", "props"]
+fieldProjection:
+  names: ["value"]
+criteria:{_leaf("props", "EQ", "str", '{"k": 26}')}
+limit: 100000
+""")
+    df = compile_measure(spark, cat, q)
+    sql = ("SELECT ts, user_id, props, value FROM (SELECT *, row_number() "
+           "OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) AS rn "
+           f"FROM events WHERE ts >= TIMESTAMP '{T0S}' "
+           f"AND ts < TIMESTAMP '{T1S}') "
+           """WHERE rn = 1 AND props = '{"k": 26}'""")
+    assert _run_dual(env, df, sql, False)
+
+
 # ---------------------------------------------------------------------------
 # Stream: leaf / tree / feature-combo cases (generic oracle)
 # ---------------------------------------------------------------------------
