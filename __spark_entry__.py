@@ -59,12 +59,12 @@ def entry(spark: SparkSession) -> DataFrame:
 SWEEP_CAP = 50
 TOUCHED = (
     "request_yaml_trace",
-    "tpch_q21_sole_delayed",
-    "measure_multigroup_schema_merge",
-    "stream_multigroup_schema_merge",
-    "trace_multigroup_schema_merge",
-    "measure_multigroup_union",
+    "write_mixed_roundtrip",
+    "topn_per_window",
+    "topn_postagg_mean",
     "topn_multigroup_postagg_max",
+    "topn_entity_conditions",
+    "request_yaml_topn",
 )
 _ROUND_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")
 

@@ -109,6 +109,19 @@ class TimeRange:
         return TimeRange(p(begin) if begin else None, p(end) if end else None)
 
 
+_INTERVAL_UNITS = {
+    "second": 1, "seconds": 1, "minute": 60, "minutes": 60,
+    "hour": 3600, "hours": 3600, "day": 86400, "days": 86400,
+    "week": 604800, "weeks": 604800,
+}
+
+
+def parse_interval(text: str) -> _dt.timedelta:
+    """'10 minutes' / '1 hour' / '30 days' -> timedelta."""
+    n, unit = text.strip().split()
+    return _dt.timedelta(seconds=int(n) * _INTERVAL_UNITS[unit.lower()])
+
+
 @dataclass(frozen=True)
 class AggregationSpec:
     """Aggregate ``function`` over measure ``field`` —

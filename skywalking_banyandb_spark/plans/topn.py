@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import Catalog, MeasureSchema
 from ..errors import QueryAnalyzeError
-from ..model import AggFunc, BinaryOp, Sort, TopNQuery
+from ..model import AggFunc, BinaryOp, Sort, TimeRange, TopNQuery, parse_interval
 from ..sources.parquet import in_range, read_table
 from ..operators.criteria import compile_condition, compile_criteria, qcol
 from ..operators.topk import per_window_top_n, top_n
@@ -52,6 +52,7 @@ def materialize_topn(
     criteria=None,
     group_tags: Optional[Sequence[str]] = None,
     counters_number: Optional[int] = None,
+    time_range: Optional[TimeRange] = None,
 ) -> DataFrame:
     """Build the ``_top_n_result`` content from the source measure (batch).
 
@@ -77,7 +78,13 @@ def materialize_topn(
     entity — the engine's shorthand for "each series is its own group"
     (the reference's own no-groupBy default is a single global group,
     ``topn.go:855-864``; entity-as-group keeps per-series candidates so
-    query-time entity EQ pins still resolve)."""
+    query-time entity EQ pins still resolve).
+
+    ``time_range`` bounds the windows a query will keep (``window_start``
+    in ``[begin, end)``): those windows only hold rows with ``ts`` in
+    ``[begin, end + window)``, so the scan reads exactly that range and
+    the range reaches parquet. Windows cut by the bounds come out partial;
+    the caller's ``window_start`` filter drops them."""
     from ..catalog import materialize_derived, resolve_stage_paths
 
     if schema.field(field) is None:
@@ -85,7 +92,13 @@ def materialize_topn(
     keys = list(group_tags) if group_tags else list(schema.entity)
     extra = [e for e in schema.entity if e not in keys]
     series = keys + extra  # GroupName tags ∪ seriesID (the source entity)
-    df = read_table(spark, *resolve_stage_paths(schema, stages))
+    scan = None
+    if time_range is not None:
+        end = time_range.end
+        if end is not None:
+            end = end + parse_interval(window)
+        scan = (schema.ts_column, time_range.begin, end)
+    df = read_table(spark, *resolve_stage_paths(schema, stages), time_range=scan)
     df = materialize_derived(df, schema)
     for k in series:
         if k not in df.columns:
@@ -259,7 +272,8 @@ def compile_topn(
             df = read_table(spark, s.topn_path)
         else:
             df = materialize_topn(
-                spark, s, field, q.top_n, window, q.sort, stages=q.stages
+                spark, s, field, q.top_n, window, q.sort, stages=q.stages,
+                time_range=q.time_range,
             )
         parts.append(
             in_range(df, "window_start", q.time_range.begin, q.time_range.end))
@@ -302,6 +316,7 @@ def _compile_topn_resolved(
             stages=q.stages, criteria=d.criteria,
             group_tags=d.group_by_tags,
             counters_number=d.counters_number,
+            time_range=q.time_range,
         )
         parts.append(
             in_range(df, "window_start", q.time_range.begin, q.time_range.end))

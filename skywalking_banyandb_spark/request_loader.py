@@ -522,41 +522,18 @@ def load_write_requests(docs: Sequence, catalog, kind: str) -> Dict[tuple, List[
 
 def apply_write_requests(spark, catalog, kind: str, docs: Sequence,
                          store_root: str, mode: str = "overwrite") -> Dict[tuple, str]:
-    """Materialize a parsed write stream through the segment write path
-    (:mod:`..sources.writer`). Returns ``{(group, name): store_path}`` so
-    the caller can point a query catalog at the written stores."""
-    from .catalog import TAG_TYPE_TO_SPARK
-    from .sources.writer import write_measure, write_stream, write_trace
+    """Flush a parsed write stream as segment parts
+    (:func:`..sources.writer.write_parts`; the rows are already on the
+    driver, so no Spark job runs), bucketed in ``spark``'s session time
+    zone. Returns ``{(group, name): store_path}`` so the caller can point
+    a query catalog at the written stores."""
+    from .sources.writer import write_parts
 
-    parsed = load_write_requests(docs, catalog, kind)
+    zone = spark.conf.get("spark.sql.session.timeZone")
     paths: Dict[tuple, str] = {}
-    for (grp, name), rows in parsed.items():
-        schema = catalog.get(grp, kind, name)
-        cols: List[tuple] = [(schema.ts_column, "timestamp")]
-        if kind == "measure":
-            cols += [(t.name, TAG_TYPE_TO_SPARK[t.type]) for t in schema.tags]
-            cols += [(f.name, TAG_TYPE_TO_SPARK[f.type]) for f in schema.fields]
-            if schema.version_column:
-                cols.append((schema.version_column, "bigint"))
-        elif kind == "stream":
-            cols.append((schema.element_id_column, "bigint"))
-            cols += [(t.name, TAG_TYPE_TO_SPARK[t.type])
-                     for t in schema.tags if t.expr is None]
-        else:
-            cols += [(schema.trace_id_column, "bigint"),
-                     (schema.span_id_column, "bigint")]
-            cols += [(t.name, TAG_TYPE_TO_SPARK[t.type]) for t in schema.tags]
-            if schema.span_column:
-                cols.append((schema.span_column, "string"))
-        ddl = ", ".join(f"{c} {t}" for c, t in cols)
-        data = [tuple(r.get(c) for c, _ in cols) for r in rows]
-        df = spark.createDataFrame(data, ddl)
+    for (grp, name), rows in load_write_requests(docs, catalog, kind).items():
         path = f"{store_root}/{grp}__{name}"
-        if kind == "measure":
-            write_measure(df, schema, path, mode=mode)
-        elif kind == "stream":
-            write_stream(df, schema, path, mode=mode)
-        else:
-            write_trace(df, schema, path, mode=mode)
+        write_parts(rows, catalog.get(grp, kind, name), kind, path, zone,
+                    mode=mode)
         paths[(grp, name)] = path
     return paths

@@ -3,17 +3,30 @@
 ``trace/v1/write.proto``, ``property/v1/rpc.proto`` Apply/Delete).
 
 Physical layout (the 100 TB design, mirroring group→segment→shard→part of
-``banyand/internal/storage/storage.go:110-137``):
+``banyand/internal/storage/storage.go:110-137``), one rule for every
+writer — :data:`_GRANULARITY` and :func:`layout_keys`:
 
-- partition by coarse ``ts_bucket`` (= segment_interval HOUR/DAY) — gives
-  Catalyst partition pruning for every time-range query, the counterpart of
+- partition by coarse ``ts_bucket`` = ``date_trunc(segment_interval, ts)``
+  (HOUR/DAY, in the session time zone; driver-flushed parts are always
+  DAY, the one interval the request path uses) — gives Catalyst partition
+  pruning for every time-range query, the counterpart of
   ``SelectSegments(timeRange)``;
-- within a partition, sort by (entity..., ts) — the reference's
-  series-sorted blocks (``banyand/measure/block.go:79-84``); parquet gets
-  tight min/max stats per row group on the entity columns, so entity
-  predicates row-group-skip (the inverted/skipping index analogue);
+- within a partition, sort by the kind's layout keys: measure
+  (entity..., ts) — the reference's series-sorted blocks
+  (``banyand/measure/block.go:79-84``), so parquet gets tight min/max stats
+  per row group on the entity columns and entity predicates row-group-skip
+  (the inverted/skipping index analogue); stream (ts, element_id); trace
+  (trace_id, ts, span_id);
 - version stays a plain column; dedup happens at read (LSM semantics:
   appends never rewrite).
+
+Two ways in. Batches already resident on the driver (typed WriteRequests)
+are flushed by :func:`write_parts` as local series-sorted parquet parts,
+one per touched DAY segment, with no Spark job — the memtable flush of
+``banyand/measure/flusher.go``. DataFrames (registry fixtures, streaming
+``foreachBatch``) go through Spark in :func:`write_measure`,
+:func:`write_stream` and :func:`write_trace`. Both produce the same
+``ts_bucket=`` directories, sort order and read-back schema.
 
 Property Apply is last-write-wins upsert by (group, name, id) with a
 monotonically increasing applied_at version — implemented as
@@ -22,18 +35,204 @@ read-modify-write parquet here (Delta/Iceberg MERGE on a real deployment).
 
 from __future__ import annotations
 
+import datetime as dt
 import os
+import re
 import shutil
 import tempfile
-from typing import Optional, Sequence
+import uuid
+from typing import List, Mapping, Optional, Sequence, Tuple
+from zoneinfo import ZoneInfo
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
-from ..catalog import MeasureSchema, PropertySchema, StreamSchema, TraceSchema
+from ..catalog import (TAG_TYPE_TO_SPARK, MeasureSchema, PropertySchema,
+                       StreamSchema, TraceSchema)
 from .parquet import read_table
 
+# segment_interval -> date_trunc unit
 _GRANULARITY = {"HOUR": "hour", "DAY": "day"}
+
+_ARROW_TYPES = {
+    "string": pa.string(),
+    "bigint": pa.int64(),
+    "double": pa.float64(),
+    "array<string>": pa.list_(pa.string()),
+    "array<bigint>": pa.list_(pa.int64()),
+    "binary": pa.binary(),
+    "timestamp": pa.timestamp("us", tz="UTC"),
+}
+# Python types ``createDataFrame`` accepts per stored type, matched exactly
+# as its verifier does (a bool is not a bigint, an int is not a double);
+# arrays check their elements
+_PY_TYPES = {
+    "string": (str,),
+    "bigint": (int,),
+    "double": (float,),
+    "binary": (bytes, bytearray),
+    "timestamp": (dt.datetime,),
+}
+# a ``spark.sql.session.timeZone`` offset ID: ``+05:30``, ``-08``, ``GMT+8``
+_OFFSET_ID = re.compile(r"(?:UTC|GMT|UT)?([+-])(\d{1,2})(?::?(\d{2}))?(?::?(\d{2}))?")
+
+
+def layout_keys(schema, kind: str) -> List[str]:
+    """Within-segment sort keys of a resource kind (see the module doc)."""
+    if kind == "measure":
+        return [*schema.entity, schema.ts_column]
+    if kind == "stream":
+        return [schema.ts_column, schema.element_id_column]
+    if kind == "trace":
+        return [schema.trace_id_column, schema.ts_column,
+                schema.span_id_column]
+    raise ValueError(f"unsupported write kind {kind!r}")
+
+
+def stored_columns(schema, kind: str) -> List[Tuple[str, str]]:
+    """``(column, Spark type)`` of a resource's written rows, in file
+    order: ts, then measure tags + fields + version, stream element id +
+    physical tags, or trace ids + tags + span."""
+    cols: List[Tuple[str, str]] = [(schema.ts_column, "timestamp")]
+    if kind == "measure":
+        cols += [(t.name, TAG_TYPE_TO_SPARK[t.type]) for t in schema.tags]
+        cols += [(f.name, TAG_TYPE_TO_SPARK[f.type]) for f in schema.fields]
+        if schema.version_column:
+            cols.append((schema.version_column, "bigint"))
+    elif kind == "stream":
+        cols.append((schema.element_id_column, "bigint"))
+        cols += [(t.name, TAG_TYPE_TO_SPARK[t.type])
+                 for t in schema.tags if t.expr is None]
+    elif kind == "trace":
+        cols += [(schema.trace_id_column, "bigint"),
+                 (schema.span_id_column, "bigint")]
+        cols += [(t.name, TAG_TYPE_TO_SPARK[t.type]) for t in schema.tags]
+        if schema.span_column:
+            cols.append((schema.span_column, "string"))
+    else:
+        raise ValueError(f"unsupported write kind {kind!r}")
+    return cols
+
+
+def _segmented(df: DataFrame, schema, kind: str,
+               segment_interval: str) -> DataFrame:
+    """The layout rule on a DataFrame: ``ts_bucket`` column, one shuffle
+    partition per segment, sorted by :func:`layout_keys`. ``ts_bucket``
+    leads the sort: a partitioned write needs its input ordered by the
+    partition column and otherwise re-sorts by it alone, which drops a
+    sort on the layout keys."""
+    gran = _GRANULARITY[segment_interval.upper()]
+    return (
+        df.withColumn("ts_bucket", F.date_trunc(gran, F.col(schema.ts_column)))
+        .repartition(F.col("ts_bucket"))
+        .sortWithinPartitions("ts_bucket", *layout_keys(schema, kind))
+    )
+
+
+def _zone(name: str) -> dt.tzinfo:
+    """A ``spark.sql.session.timeZone`` value as a tzinfo: region IDs
+    through zoneinfo, offset IDs (and ``Z``) as fixed offsets."""
+    if name == "Z":
+        return dt.timezone.utc
+    m = _OFFSET_ID.fullmatch(name)
+    if m is None:
+        return ZoneInfo(name)
+    off = dt.timedelta(hours=int(m[2]), minutes=int(m[3] or 0),
+                       seconds=int(m[4] or 0))
+    return dt.timezone(-off if m[1] == "-" else off)
+
+
+def _accepts(typ: str, v) -> bool:
+    if typ.startswith("array<"):
+        elem = _PY_TYPES[typ[len("array<"):-1]]
+        return type(v) in (list, tuple) and all(
+            e is None or type(e) in elem for e in v)
+    return type(v) in _PY_TYPES[typ]
+
+
+def _arrow_table(rows: Sequence[Mapping], cols) -> pa.Table:
+    """Rows -> one typed table. A value of a Python type ``createDataFrame``
+    rejects raises TypeError (pyarrow would convert some silently).
+    Timestamps take the instants ``createDataFrame`` would store
+    (``TimestampType.toInternal``: naive values are local wall time of this
+    process)."""
+    to_us = TimestampType().toInternal
+    arrays = []
+    for name, typ in cols:
+        vals = [r.get(name) for r in rows]
+        bad = next((v for v in vals if v is not None and not _accepts(typ, v)),
+                   None)
+        if bad is not None:
+            raise TypeError(f"cannot write column {name!r} as {typ}: "
+                            f"{bad!r} of type {type(bad).__name__}")
+        try:
+            if typ == "timestamp":
+                vals = [to_us(v) for v in vals]
+            arrays.append(pa.array(vals, type=_ARROW_TYPES[typ]))
+        except (OverflowError, pa.ArrowException) as e:
+            raise TypeError(f"cannot write column {name!r} as {typ}: {e}") from e
+    return pa.Table.from_arrays(arrays, names=[c for c, _ in cols])
+
+
+def _segment_name(t: dt.datetime, zone: dt.tzinfo) -> str:
+    """``ts_bucket=`` directory of instant ``t``: Spark's
+    ``date_trunc('day', ...)`` in ``zone``, rendered and path-escaped as a
+    Spark partition value."""
+    start = t.astimezone(zone).replace(hour=0, minute=0, second=0,
+                                       microsecond=0)
+    # back through UTC, so a start inside a DST gap renders shifted forward
+    label = start.astimezone(dt.timezone.utc).astimezone(zone)
+    return "ts_bucket=" + label.strftime("%Y-%m-%d %H:%M:%S").replace(":", "%3A")
+
+
+def write_parts(
+    rows: Sequence[Mapping],
+    schema,
+    kind: str,
+    path: str,
+    time_zone: str,
+    mode: str = "append",
+) -> None:
+    """Flush driver-resident rows as one series-sorted parquet part per
+    touched DAY segment — the memtable flush of
+    ``banyand/measure/flusher.go``, with no Spark job.
+
+    ``rows`` map column name -> value (missing keys are NULL); the columns
+    and types are :func:`stored_columns`. ``time_zone`` is the writing
+    session's ``spark.sql.session.timeZone``; segments are days in it, as
+    the Spark writers' ``date_trunc`` makes them. Every segment's table is
+    built before the first file is touched, so a value that cannot be
+    converted raises and leaves the store as it was. Each part is written
+    to a dot-prefixed temp file (hidden from readers) and renamed into
+    ``ts_bucket=<segment>/part-<uuid>.snappy.parquet``. ``mode`` is
+    ``append`` or ``overwrite``; overwrite replaces the whole store, like
+    Spark's static overwrite. Unlike Spark, no ``_SUCCESS`` marker is
+    written."""
+    if mode not in ("append", "overwrite"):
+        raise ValueError(f"unsupported write mode {mode!r}")
+    table = _arrow_table(rows, stored_columns(schema, kind))
+    zone = _zone(time_zone)
+    members: dict = {}
+    for i, t in enumerate(table.column(schema.ts_column).to_pylist()):
+        members.setdefault(_segment_name(t, zone), []).append(i)
+    keys = [(k, "ascending") for k in layout_keys(schema, kind)]
+    parts = {seg: table.take(idx).sort_by(keys, null_placement="at_start")
+             for seg, idx in members.items()}
+    if mode == "overwrite":
+        shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path, exist_ok=True)
+    for seg, part in parts.items():
+        segdir = os.path.join(path, seg)
+        os.makedirs(segdir, exist_ok=True)
+        name = f"part-{uuid.uuid4()}.snappy.parquet"
+        tmp = os.path.join(segdir, f".{name}.tmp")
+        # no ARROW:schema footer copy: Spark does not read it, and without
+        # it a part is the size of the one Spark would write
+        pq.write_table(part, tmp, compression="snappy", store_schema=False)
+        os.rename(tmp, os.path.join(segdir, name))
 
 
 def write_measure(
@@ -54,12 +253,7 @@ def write_measure(
     contract. Replica 0 is written once and file-copied: the reference
     delegates replication to the storage layer (clustering.md), and a
     local copytree is that layer's stand-in."""
-    gran = _GRANULARITY[segment_interval.upper()]
-    out = (
-        df.withColumn("ts_bucket", F.date_trunc(gran, F.col(schema.ts_column)))
-        .repartition(F.col("ts_bucket"))
-        .sortWithinPartitions(*schema.entity, schema.ts_column)
-    )
+    out = _segmented(df, schema, "measure", segment_interval)
     if replicas > 0:
         primary = os.path.join(path, "replica=0")
         out.write.partitionBy("ts_bucket").mode(mode).parquet(primary)
@@ -88,16 +282,11 @@ def write_stream(
     skips columns that already exist, so a query is oblivious to which
     side produced the tag, while stored columns let HAVING/MATCH filters
     ride parquet stats instead of recomputing per query)."""
-    gran = _GRANULARITY[segment_interval.upper()]
     if materialize_derived_tags:
         from ..catalog import materialize_derived
 
         df = materialize_derived(df, schema)
-    out = (
-        df.withColumn("ts_bucket", F.date_trunc(gran, F.col(schema.ts_column)))
-        .repartition(F.col("ts_bucket"))
-        .sortWithinPartitions(schema.ts_column, schema.element_id_column)
-    )
+    out = _segmented(df, schema, "stream", segment_interval)
     out.write.partitionBy("ts_bucket").mode(mode).parquet(path)
 
 
@@ -109,16 +298,10 @@ def write_trace(
     segment_interval: str = "DAY",
 ) -> None:
     """Append spans in the segment layout (``trace/v1/write.proto``):
-    partitioned by coarse ts_bucket, sorted by (trace_id, ts, span_id)
-    within a segment so one trace's spans cluster in a row-group run and
-    trace-id predicates row-group-skip (the sidx analogue)."""
-    gran = _GRANULARITY[segment_interval.upper()]
-    out = (
-        df.withColumn("ts_bucket", F.date_trunc(gran, F.col(schema.ts_column)))
-        .repartition(F.col("ts_bucket"))
-        .sortWithinPartitions(
-            schema.trace_id_column, schema.ts_column, schema.span_id_column)
-    )
+    sorted by (trace_id, ts, span_id) within a segment so one trace's spans
+    cluster in a row-group run and trace-id predicates row-group-skip (the
+    sidx analogue)."""
+    out = _segmented(df, schema, "trace", segment_interval)
     out.write.partitionBy("ts_bucket").mode(mode).parquet(path)
 
 
@@ -145,7 +328,7 @@ def write_measure_bucketed(
         .mode("overwrite")
         .partitionBy("ts_bucket")
         .bucketBy(buckets, *schema.entity)
-        .sortBy(*schema.entity, schema.ts_column)
+        .sortBy(*layout_keys(schema, "measure"))
         .saveAsTable(table_name)
     )
 
@@ -176,7 +359,7 @@ def compact_segments(
         out = (
             spark.read.parquet(segdir)
             .coalesce(target_files)
-            .sortWithinPartitions(*schema.entity, schema.ts_column)
+            .sortWithinPartitions(*layout_keys(schema, "measure"))
         )
         tmp = segdir + "._compact"
         out.write.mode("overwrite").parquet(tmp)

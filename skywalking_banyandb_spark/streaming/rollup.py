@@ -36,7 +36,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .topn_stream import _max_partition_window, _parse_interval, ensure_event_time
+from ..model import parse_interval
+from .topn_stream import _max_partition_window, ensure_event_time
 
 
 def rollup_stream_query(
@@ -81,8 +82,8 @@ def start_rollup_materialization(
     """Maintain the continuous aggregate at ``output_path``."""
     agg = rollup_stream_query(
         source, ts_col, value_col, group_cols, window, lateness)
-    late_delta = _parse_interval(lateness)
-    win_delta = _parse_interval(window)
+    late_delta = parse_interval(lateness)
+    win_delta = parse_interval(window)
     keys = ["window_start", *group_cols]
 
     def _flush(batch: DataFrame, batch_id: int) -> None:
@@ -189,8 +190,8 @@ def start_hll_materialization(
     partition-scoped flush + isWindowLate gate as the rollup)."""
     agg = hll_stream_query(
         source, ts_col, key_col, group_cols, window, lateness)
-    late_delta = _parse_interval(lateness)
-    win_delta = _parse_interval(window)
+    late_delta = parse_interval(lateness)
+    win_delta = parse_interval(window)
     keys = ["window_start", *group_cols, "bucket"]
 
     def _flush(batch: DataFrame, batch_id: int) -> None:

@@ -79,9 +79,9 @@ def stateful_topn(
         ]
     )
 
-    from .topn_stream import _parse_interval
+    from ..model import parse_interval
 
-    purge_delta = _parse_interval(window) + _parse_interval(lateness)
+    purge_delta = parse_interval(window) + parse_interval(lateness)
 
     def update(
         key: Tuple[Any, ...],

@@ -39,14 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import MeasureSchema
-from ..model import Sort
+from ..model import Sort, parse_interval
 from ..operators.topk import per_window_top_n
-
-_INTERVAL_UNITS = {
-    "second": 1, "seconds": 1, "minute": 60, "minutes": 60,
-    "hour": 3600, "hours": 3600, "day": 86400, "days": 86400,
-    "week": 604800, "weeks": 604800,
-}
 
 
 def _max_partition_window(output_path: str):
@@ -73,14 +67,6 @@ def _max_partition_window(output_path: str):
         if best is None or val > best:
             best = val
     return best
-
-
-def _parse_interval(text: str):
-    """'10 minutes' / '1 hour' / '30 days' -> timedelta."""
-    import datetime as dt
-
-    n, unit = text.strip().split()
-    return dt.timedelta(seconds=int(n) * _INTERVAL_UNITS[unit.lower()])
 
 
 def ensure_event_time(df: DataFrame, ts_col: str) -> DataFrame:
@@ -181,8 +167,8 @@ def start_topn_materialization(
             source = source.where(pred)
     agg = topn_stream_query(source, schema, field, window, lateness)
 
-    late_delta = _parse_interval(lateness)
-    win_delta = _parse_interval(window)
+    late_delta = parse_interval(lateness)
+    win_delta = parse_interval(window)
 
     def _flush(batch: DataFrame, batch_id: int) -> None:
         if not batch.take(1):

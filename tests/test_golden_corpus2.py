@@ -17,13 +17,15 @@ Verify semantics per ``test/cases/measure/measure.go:36-43``: want rows
 
 from __future__ import annotations
 
+import datetime as dt
+
 import duckdb
 import pytest
 
 from skywalking_banyandb_spark.catalog import default_catalog
 from skywalking_banyandb_spark.errors import QueryAnalyzeError
 from skywalking_banyandb_spark.functions.analyzers import tokens_sql
-from skywalking_banyandb_spark.model import BinaryOp, Sort, cond
+from skywalking_banyandb_spark.model import BinaryOp, Sort, TimeRange, TopNQuery, cond
 from skywalking_banyandb_spark.operators.criteria import compile_condition
 from skywalking_banyandb_spark.plans.measure import compile_measure
 from skywalking_banyandb_spark.plans.property import compile_property
@@ -1432,6 +1434,26 @@ def test_topn_multi_group_aggr_desc(env):
     )
     df = compile_topn(spark, cat, q)
     _run_dual(env, df, _topn_oracle2(3, "DESC", "DESC", "MAX(value)"), True)
+
+
+def test_topn_window_edges_of_pushed_range(env):
+    """The TopN scan reads ts in [begin, end + window). At begin 11:30 the
+    11:00 window straddles begin and is dropped whole; at end 19:30 the
+    19:00 window starts just before end and keeps its rows after end."""
+    spark, cat, con = env
+    b, e = "2024-01-03 11:30:00", "2024-01-05 19:30:00"
+    q = TopNQuery(groups=["g1"], name="metrics", top_n=2, sort=Sort.DESC,
+                  time_range=TimeRange.of(b.replace(" ", "T"),
+                                          e.replace(" ", "T")))
+    sql = _TOPN_SQL_BASE.format(rankdir="DESC", n=2, pin="") + f"""
+        SELECT window_start, user_id, value FROM ranked
+        WHERE window_start >= TIMESTAMP '{b}' AND window_start < TIMESTAMP '{e}'
+        ORDER BY window_start, value DESC, user_id"""
+    rows = _run_dual(env, compile_topn(spark, cat, q), sql, True)
+    starts = {r[2] for r in rows}  # columns sorted: user_id, value, window_start
+    assert dt.datetime(2024, 1, 5, 19) in starts
+    assert dt.datetime(2024, 1, 3, 11) not in starts
+    assert dt.datetime(2024, 1, 3, 12) in starts
 
 
 # ---------------------------------------------------------------------------

@@ -16,10 +16,12 @@ from skywalking_banyandb_spark.model import (
     MeasureQuery,
     StreamQuery,
     TimeRange,
+    TopNQuery,
     cond,
 )
 from skywalking_banyandb_spark.plans.measure import compile_measure
 from skywalking_banyandb_spark.plans.stream import compile_stream
+from skywalking_banyandb_spark.plans.topn import compile_topn
 
 from conftest import SF_SMALL
 
@@ -48,6 +50,19 @@ def test_stream_filter_pushdown_and_pruning(spark):
     # column pruning: props/value are never read
     rs = plan[plan.index("ReadSchema"):].split("\n")[0]
     assert "props" not in rs and "value" not in rs
+
+
+def test_topn_time_range_reaches_the_scan(spark):
+    """A one-day TopN reads ts in [begin, end + window): both bounds are
+    pushed to the parquet scan, not applied after the per-window
+    ranking."""
+    q = TopNQuery(groups=["g1"], name="metrics", top_n=3,
+                  time_range=TimeRange.of("2024-01-03T00:00:00",
+                                          "2024-01-04T00:00:00"))
+    plan = _plan(compile_topn(spark, default_catalog(SF_SMALL), q))
+    pushed = plan.split("PushedFilters: [")[1].split("]")[0]
+    assert "GreaterThanOrEqual(ts,2024-01-03T00:00)" in pushed, pushed
+    assert "LessThan(ts,2024-01-04T01:00)" in pushed, pushed
 
 
 def test_measure_agg_is_partial_final(spark):
